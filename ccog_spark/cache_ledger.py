@@ -59,6 +59,15 @@ def track(spark, owner: str, df: DataFrame) -> DataFrame:
     return df
 
 
+def track_in_capture(spark, owner: str, handle):
+    """``track`` for a release handle that is not a DataFrame persist
+    (anything with ``unpersist(blocking=…)``, e.g. checkpoint blocks):
+    attributed like a captured persist — to the innermost capture open
+    on THIS thread — and to ``owner`` outside any capture."""
+    stack = getattr(_TLS, "stack", None)
+    return track(spark, stack[-1][1] if stack else owner, handle)
+
+
 def _drop(entries: list[tuple[str, DataFrame]], blocking: bool) -> None:
     for _, df in entries:
         try:

@@ -29,16 +29,22 @@ def submit_inheriting(
     pool: Executor, spark, fn: Callable[..., Any], *args: Any, **kw: Any
 ) -> Future:
     """``pool.submit(fn, *args, **kw)`` with the CALLER's job group /
-    description / scheduler-pool properties re-set in the worker
-    thread first, so every job the callable issues is attributed (and
-    cancellable) exactly as if it ran in the calling thread."""
+    description / scheduler-pool properties set in the worker thread
+    while the callable runs, so every job it issues is attributed (and
+    cancellable) exactly as if it ran in the calling thread. The worker
+    thread's own values are restored afterwards: a pooled thread must
+    not carry this caller's group into its next task."""
     sc = spark.sparkContext
     props = [(p, sc.getLocalProperty(p)) for p in _INHERITED_PROPS]
 
     def run() -> Any:
-        for key, val in props:
-            if val is not None:
+        prior = [(p, sc.getLocalProperty(p)) for p in _INHERITED_PROPS]
+        try:
+            for key, val in props:
                 sc.setLocalProperty(key, val)
-        return fn(*args, **kw)
+            return fn(*args, **kw)
+        finally:
+            for key, val in prior:
+                sc.setLocalProperty(key, val)
 
     return pool.submit(run)

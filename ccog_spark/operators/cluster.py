@@ -21,6 +21,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ccog_spark import cache_ledger
+
+
+class _CheckpointBlocks:
+    """Release handle for a localCheckpoint-ed frame. Its blocks belong
+    to the checkpointed RDD under the frame's LogicalRDD, which
+    ``DataFrame.unpersist`` leaves alone; without this they stay in
+    storage until the JVM's ContextCleaner happens to collect the RDD.
+    Same ``unpersist`` call shape as a DataFrame, so the cache ledger
+    can hold it."""
+
+    def __init__(self, df: DataFrame):
+        self._rdd = df._jdf.queryExecution().analyzed().rdd()
+
+    def unpersist(self, blocking: bool = False) -> None:
+        self._rdd.unpersist(blocking)
+
 
 def connected_components(
     edges: DataFrame,
@@ -106,15 +123,21 @@ def connected_components(
         changed = stepped.where(F.col("label") != F.col("old_label")).count()
         # the count above materialized `stepped`; the previous round's
         # caches are now dead weight (consumers of the select below hit
-        # stepped's checkpoint blocks, not its lineage). Checkpoint
-        # blocks themselves are freed by the ContextCleaner when the
-        # RDD goes out of scope; unpersist here handles the persisted
-        # init-round `labels` and is a no-op on checkpointed frames.
+        # stepped's checkpoint blocks, not its lineage): the persisted
+        # init-round `labels`, or the previous round's checkpoint blocks
         for f in prev_cached:
             f.unpersist()
-        prev_cached = [stepped]
+        prev_cached = [_CheckpointBlocks(stepped)]
         labels = stepped.select("doc_id", "label")
         if changed == 0:
             break
     both.unpersist()
+    # the result reads the last round's checkpoint blocks, so they stay
+    # until the ledger releases them (the registry does when another
+    # query enters) — never at this operator's re-entry, because a
+    # checkpoint cannot be recomputed once its blocks are gone
+    for f in prev_cached:
+        cache_ledger.track_in_capture(
+            edges.sparkSession, "connected_components", f
+        )
     return labels.select("doc_id", F.col("label").alias("cluster"))

@@ -184,7 +184,7 @@ def cog_cubic(spark: SparkSession, sf_dir: str) -> DataFrame:
     kernel='cubic' (the reference writer accepts any kernel in its
     overlap table and runs it per chunk, ccog/ccog.py:41-53,905-915,
     292-360; write_cog now routes the interpolating five through
-    raster.pyramid.build_pyramid_interp), parse the produced file with
+    raster.pyramid.build_tile_pyramid), parse the produced file with
     the in-repo TIFF reader, and emit every VALID pixel of the base
     image and the first overview. The DuckDB oracle recomputes the
     overview DIRECTLY from the pixels CTE with the same

@@ -3,13 +3,19 @@
 The end-to-end job, re-architected for Spark from the reference's dask
 graph (ccog/ccog.py:558-666 + aws_tools.py:181-245):
 
-1. pyramid: driver level loop, one decimation aggregate per level
-   (raster.pyramid ≙ ccog's _COG_graph_builder loop).
-2. tile assembly: groupBy(tile key) → dense numpy blocks
-   (raster.tiles ≙ the chunk layout contract, ccog/ccog.py:940-946).
-3. encode: Arrow-batched mapInPandas, zlib deflate per tile; tiles with
+1. level-0 tiles: ``write_ccog`` ingests the array as dense float64
+   tiles with a packed validity mask (sources.raster_ingest ≙ the chunk
+   layout contract, ccog/ccog.py:940-946); ``write_cog`` tiles its
+   long-form pixels once, at level 0 (raster.tiles.tiles_from_pixels).
+2. pyramid: driver level loop, one tile-level shuffle per level —
+   ``groupBy(band, tile_y // 2, tile_x // 2)`` over the ≤4 child tiles
+   (raster.pyramid ≙ ccog's _COG_graph_builder loop). Pixels never
+   appear as rows here.
+3. encode: cast each tile to the output dtype (raster.tiles.cast_tiles),
+   then Arrow-batched mapInPandas, zlib deflate per tile; tiles with
    zero valid pixels are elided BEFORE encoding (sparse tiles,
-   ccog/ccog.py:443) — they cost neither CPU nor bytes.
+   ccog/ccog.py:443) — they cost neither CPU nor bytes. Mask tiles pack
+   band 0's validity mask directly.
 4. index collect: only (tile key, nbytes) reaches the driver — a few
    ints per tile, which is what keeps this safe at 100 TB
    (ccog/ccog.py:661-663 has the same property; SURVEY §4.4).
@@ -23,6 +29,7 @@ Returns the CogPlan and the completed object path.
 
 from __future__ import annotations
 
+import inspect
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -31,13 +38,8 @@ from pyspark.sql import types as T
 
 from ccog_spark.raster import codecs as codecs_mod
 from ccog_spark.raster import tiff
-from ccog_spark.raster.pyramid import (
-    KERNELS,
-    build_pyramid,
-    build_pyramid_interp,
-    overview_count,
-)
-from ccog_spark.raster.tiles import tiles_from_pixels
+from ccog_spark.raster.pyramid import build_tile_pyramid, overview_count
+from ccog_spark.raster.tiles import cast_tiles, tiles_from_pixels
 from ccog_spark.sinks.mpu import pack_parts, resolve_store, upload_segments
 
 ENC_SCHEMA = (
@@ -62,8 +64,7 @@ def encode_tiles(
     valid pixels) are filtered out up front.
 
     Payloads arrive as full blocksize² blocks ALREADY in the output
-    ``dtype`` (tiles_from_pixels assembles them natively, so a uint8
-    raster ships 1-byte samples through the shuffle); the kernel
+    ``dtype`` (raster.tiles.cast_tiles); the kernel
     applies the TIFF predictor (2 = integer horizontal differencing,
     3 = float byte differencing — same math as tiff.predict_tile,
     inlined so the closure stays self-contained), then compresses.
@@ -123,8 +124,7 @@ def encode_tiles(
             for pdf in it:
                 data = []
                 for d, level in zip(pdf["data"], pdf["level"]):
-                    # payload already native dtype (tiles_from_pixels
-                    # assembles blocks in the output sample type);
+                    # payload already native dtype (cast_tiles);
                     # interleaved payloads (bs×bs×n) flatten the extra
                     # samples into the row — predictors are rejected
                     # for those upstream, so row shape is immaterial
@@ -179,55 +179,29 @@ MASK_ENC_SCHEMA = (
 )
 
 
-def encode_mask_tiles(
-    pyr: DataFrame, blocksize: int, mask_band: int = 0
-) -> DataFrame:
-    """Dataset-mask tiles from the pyramid's per-pixel validity
-    (band ``mask_band`` — the dataset mask is ONE plane shared by all
-    bands, matching the reference's 2-D mask argument,
-    ccog/ccog.py:957-962; mask tile bytes ≙ :415-427).
+def encode_mask_tiles(pyr: DataFrame, mask_band: int = 0) -> DataFrame:
+    """Dataset-mask tiles from the tile pyramid's validity masks (band
+    ``mask_band`` — the dataset mask is ONE plane shared by all bands,
+    matching the reference's 2-D mask argument, ccog/ccog.py:957-962;
+    mask tile bytes ≙ :415-427).
 
-    One applyInPandas per (level, tile) group: row-pack the boolean
-    block to 1-bit TIFF layout (blocksize is a multiple of 16, so rows
-    are byte-aligned) and deflate. All-zero tiles are emitted with
-    valid_count 0 so the caller can elide them as sparse."""
+    Map-side: a tile's ``vmask`` (np.packbits of the row-major block)
+    is already the 1-bit TIFF layout, because blocksize is a multiple of
+    16 and rows are byte-aligned — it is only deflated. All-zero tiles
+    are emitted with valid_count 0 so the caller can elide them as
+    sparse."""
 
-    keyed = pyr.where(F.col("band") == mask_band).select(
-        "level",
-        F.floor(F.col("y") / blocksize).cast("int").alias("tile_y"),
-        F.floor(F.col("x") / blocksize).cast("int").alias("tile_x"),
-        (F.col("y") % blocksize).cast("int").alias("iy"),
-        (F.col("x") % blocksize).cast("int").alias("ix"),
-        "valid",
-    )
+    def to_mask_tiles(it):
+        import zlib
 
-    def make_kernel(bs: int):
-        def to_mask_tile(pdf):
-            import zlib
-
-            import numpy as np
-            import pandas as pd
-
-            arr = np.zeros((bs, bs), dtype=bool)
-            valid = pdf["valid"].to_numpy(dtype=bool)
-            arr[pdf["iy"].to_numpy()[valid], pdf["ix"].to_numpy()[valid]] = True
-            packed = np.packbits(arr, axis=1).tobytes()
-            data = zlib.compress(packed, 6)
-            return pd.DataFrame(
-                {
-                    "level": [int(pdf["level"].iloc[0])],
-                    "tile_y": [int(pdf["tile_y"].iloc[0])],
-                    "tile_x": [int(pdf["tile_x"].iloc[0])],
-                    "nbytes": [len(data)],
-                    "data": [data],
-                    "valid_count": [int(arr.sum())],
-                }
+        for pdf in it:
+            data = [zlib.compress(bytes(vm), 6) for vm in pdf["vmask"]]
+            yield pdf[["level", "tile_y", "tile_x", "valid_count"]].assign(
+                nbytes=[len(d) for d in data], data=data
             )
 
-        return to_mask_tile
-
-    return keyed.groupBy("level", "tile_y", "tile_x").applyInPandas(
-        make_kernel(blocksize), MASK_ENC_SCHEMA
+    return pyr.where(F.col("band") == mask_band).mapInPandas(
+        to_mask_tiles, MASK_ENC_SCHEMA
     )
 
 
@@ -325,6 +299,57 @@ def write_cog(
     sources.cog_reader into IfdInfo.colormap (≙ the reference's
     write_colormap profile key, ccog/ccog.py:231-235).
     """
+    opts = dict(locals())
+    del opts["spark"], opts["pixels"]
+    # Normalize band labels to dense 0-based plane indices (the fixture
+    # uses 1-based bands; TIFF planes are positional).
+    band_values = sorted(
+        r.band for r in pixels.select("band").distinct().collect()
+    )
+    if len(band_values) != bands:
+        raise ValueError(f"expected {bands} bands, found {band_values}")
+    band_map = F.create_map(
+        *[F.lit(x) for pair in ((b, i) for i, b in enumerate(band_values)) for x in pair]
+    )
+    pixels = pixels.withColumn("band", band_map[F.col("band")])
+    # the only pixel → tile step: level 0, float64 with the validity
+    # mask; the pyramid and encode stay in tile form from here on.
+    # Persisted: level 0 feeds both its own encode and level 1.
+    tiles = tiles_from_pixels(
+        pixels.withColumn("level", F.lit(0)),
+        blocksize,
+        0.0 if nodata is None else nodata,
+        width,
+        height,
+        dtype="float64",
+        with_mask=True,
+    ).persist()
+    try:
+        return _write_tiles(spark, tiles, pixels, **opts)
+    finally:
+        tiles.unpersist()
+
+
+_WRITE_COG_DEFAULTS = {
+    k: p.default
+    for k, p in inspect.signature(write_cog).parameters.items()
+    if p.default is not inspect.Parameter.empty
+}
+
+
+def _write_tiles(
+    spark: SparkSession, tiles: DataFrame, level0_pixels: DataFrame, *,
+    width, height, bands, target_path, blocksize, kernel, nodata,
+    n_overviews, min_part_size, fmt, statistics, band_meta,
+    compress_level, overview_compress_level, codec, geo, dtype, predictor,
+    overview_codec, overview_predictor, storage_options, internal_mask,
+    ghost, pixel_interleave, jpeg_subsampling, colormap,
+) -> CogWriteResult:
+    """The writer core behind ``write_cog`` and ``write_ccog`` (options
+    documented on ``write_cog``). ``tiles`` are the level-0 writer tiles
+    (raster.tiles.TILE_MASK_SCHEMA: float64 payload + packed vmask,
+    0-based bands); ``level0_pixels`` is the same level as long-form
+    pixels, read only by the ``statistics`` aggregate."""
     if n_overviews is None:
         n_overviews = overview_count(width, height, blocksize)
 
@@ -411,18 +436,6 @@ def write_cog(
         if pixel_interleave:
             raise ValueError("colormap and pixel_interleave conflict")
 
-    # Normalize band labels to dense 0-based plane indices (the fixture
-    # uses 1-based bands; TIFF planes are positional).
-    band_values = sorted(
-        r.band for r in pixels.select("band").distinct().collect()
-    )
-    if len(band_values) != bands:
-        raise ValueError(f"expected {bands} bands, found {band_values}")
-    band_map = F.create_map(
-        *[F.lit(x) for pair in ((b, i) for i, b in enumerate(band_values)) for x in pair]
-    )
-    pixels = pixels.withColumn("band", band_map[F.col("band")])
-
     meta_items: list[tuple] = []
     if band_meta:
         key_of = {
@@ -445,7 +458,7 @@ def write_cog(
         # one small job: 5 scalars per band (≙ ccog/ccog.py:511-541)
         vv = F.when(F.col("valid"), F.col("value"))
         stats = (
-            pixels.groupBy("band")
+            level0_pixels.groupBy("band")
             .agg(
                 F.max(vv).alias("mx"),
                 F.avg(vv).alias("mean"),
@@ -468,33 +481,17 @@ def write_cog(
                 ]
     metadata_xml = tiff.gdal_metadata_xml(meta_items) if meta_items else None
 
-    # Overview kernel routing (≙ the reference accepting any kernel in
-    # its overlap table, ccog/ccog.py:41-53,905-915): non-interpolating
-    # kernels are pure SQL aggregations; the interpolating five run the
-    # halo-exchange convolution per level (closes R7 — round 12).
-    from ccog_spark.raster.halo import INTERP_KERNELS
-
     # level persists are collected and unpersisted in the finally below
     # (round-13 ADVICE: without this, repeated writes — e.g. the
     # streaming foreachBatch COG sink — leak cached level frames for
-    # the session's lifetime)
+    # the session's lifetime). Any kernel in the reference's overlap
+    # table is accepted (ccog/ccog.py:41-53,905-915).
     level_persists: list = []
-    if kernel in KERNELS:
-        pyr = build_pyramid(
-            pixels, n_overviews, kernel=kernel,
-            persist_registry=level_persists,
-        )
-    elif kernel in INTERP_KERNELS:
-        pyr = build_pyramid_interp(
-            pixels, n_overviews, kernel, blocksize, width, height, nodata,
-            persist_registry=level_persists,
-        )
-    else:
-        raise ValueError(
-            f"unknown resampling kernel {kernel!r}; expected one of "
-            f"{sorted((*KERNELS, *INTERP_KERNELS))}"
-        )
-    tiles = tiles_from_pixels(pyr, blocksize, fill, width, height, dtype=dtype)
+    pyr = build_tile_pyramid(
+        tiles, n_overviews, kernel, blocksize, width, height, nodata,
+        persist_registry=level_persists,
+    )
+    tiles = cast_tiles(pyr, blocksize, fill, dtype)
     encode_override = None
     if pixel_interleave:
         from functools import partial
@@ -526,7 +523,7 @@ def write_cog(
     mask_enc = None
     mask_tile_nbytes = None
     if internal_mask:
-        mask_enc = encode_mask_tiles(pyr, blocksize).where(
+        mask_enc = encode_mask_tiles(pyr).where(
             F.col("valid_count") > 0
         ).persist()
         mask_tile_nbytes = {
@@ -858,17 +855,23 @@ def write_ccog(
         arr.dtype.name if arr.dtype.name in tiff.DTYPES else "float64",
     )
 
+    # the ingest tiles ARE the writer's level-0 tiles: no pixel rows
+    # unless statistics=True asks for the level-0 aggregate
     tiles = ingest_numpy(spark, arr, mask, blocksize=blocksize, nodata=nodata)
-    px = pixels_from_tiles(tiles, blocksize, nodata).drop("level")
-    return write_cog(
-        spark,
-        px,
-        width,
-        height,
-        bands,
-        store,
-        blocksize=blocksize,
-        kernel=overview_resampling,
-        nodata=nodata,
+    opts = {
+        **_WRITE_COG_DEFAULTS,
         **kwargs,
+        "blocksize": blocksize,
+        "kernel": overview_resampling,
+        "nodata": nodata,
+    }
+    return _write_tiles(
+        spark,
+        tiles,
+        pixels_from_tiles(tiles, blocksize, nodata),
+        width=width,
+        height=height,
+        bands=bands,
+        target_path=store,
+        **opts,
     )

@@ -1,18 +1,19 @@
 """Resolution pyramid: iterative 2× decimation (ccog/ccog.py:558-666).
 
 The reference builds each overview level by running GDAL per chunk and
-reassembling (ccog/ccog.py:603-659). Here a level is a *hash aggregate
-on halved coordinates* over the long-form pixel DataFrame — one shuffle
-per level whose output is 4× smaller than its input, with a driver-side
-``for level`` loop exactly like the reference's.
+reassembling (ccog/ccog.py:603-659). Here a level is one
+``groupBy(band, tile_y // 2, tile_x // 2).applyInPandas`` over the ≤4
+child tiles of each parent tile (``build_tile_pyramid``; float64 +
+validity-mask tiles, raster.tiles.TILE_MASK_SCHEMA) — one shuffle per
+level, 4× smaller than its input, in a driver-side ``for level`` loop.
 
 Non-interpolating kernels (overlap 0 in ccog's table, ccog/ccog.py:
-43-53) are pure SQL:
+43-53):
 
 - ``average``: mean of the valid pixels in each 2×2 block. The sum is
-  computed in a FIXED order (tl+tr)+(bl+br) via conditional aggregation
-  so results are bit-deterministic regardless of row order — a plain
-  AVG() would vary in the last ulp with partitioning.
+  computed in a FIXED order (tl+tr)+(bl+br) so results are
+  bit-deterministic regardless of row order — a plain AVG() would vary
+  in the last ulp with partitioning.
 - ``nearest``: the top-left pixel of each 2×2 block (GDAL picks the
   first sample).
 - ``rms``: sqrt(mean(v²)) over valid pixels, same fixed-order sums.
@@ -24,8 +25,12 @@ An output pixel is valid when any contributing pixel is valid
 (``average``/``rms``/``mode`` aggregate only valid inputs; ``nearest``
 inherits the top-left pixel's validity).
 
+``decimate``/``build_pyramid`` state the same rules as SQL over
+long-form pixels: the registry queries (``pyramid_avg``, ``decim_*``)
+and the tile kernel's bit-for-bit test oracle.
+
 Interpolating kernels (bilinear/cubic/…) need halo exchange — see
-raster.halo.
+raster.halo and ``build_tile_pyramid``.
 """
 
 from __future__ import annotations
@@ -141,77 +146,157 @@ def overview_count(width: int, height: int, blocksize: int, cap: int = 30) -> in
     return n
 
 
-def build_pyramid_interp(
-    pixels: DataFrame,
+def _tile_decimate_kernel(bs: int, kernel: str, im_w: int, im_h: int):
+    """applyInPandas kernel: ≤4 child tiles → their parent tile, equal
+    to ``decimate`` bit for bit. A valid NaN at level 0 is a SQL NULL
+    (the corner sums skip it); higher up an average pyramid it is a
+    real NaN from ±inf inputs (kept). Self-contained closure."""
+
+    cols = ["level", "band", "tile_y", "tile_x", "height", "width",
+            "data", "valid_count", "vmask"]
+
+    def step(pdf):
+        import numpy as np
+        import pandas as pd
+
+        level = int(pdf["level"].iloc[0]) + 1
+        band = int(pdf["band"].iloc[0])
+        py = int(pdf["tile_y"].iloc[0]) // 2
+        px = int(pdf["tile_x"].iloc[0]) // 2
+        v = np.full((2 * bs, 2 * bs), np.nan)
+        m = np.zeros((2 * bs, 2 * bs), dtype=bool)
+        for r in pdf.itertuples(index=False):
+            ys = slice((r.tile_y - 2 * py) * bs, (r.tile_y - 2 * py + 1) * bs)
+            xs = slice((r.tile_x - 2 * px) * bs, (r.tile_x - 2 * px + 1) * bs)
+            v[ys, xs] = np.frombuffer(r.data, dtype="<f8").reshape(bs, bs)
+            m[ys, xs] = np.unpackbits(
+                np.frombuffer(r.vmask, dtype=np.uint8), count=bs * bs
+            ).astype(bool).reshape(bs, bs)
+        # 2×2 block corners in the fixed order tl, tr, bl, br
+        cv = [v[dy::2, dx::2] for dy, dx in ((0, 0), (0, 1), (1, 0), (1, 1))]
+        cm = [m[dy::2, dx::2] for dy, dx in ((0, 0), (0, 1), (1, 0), (1, 1))]
+        if kernel == "nearest":
+            out_v, out_m = cv[0], cm[0]
+        elif kernel == "mode":
+            nan = [np.isnan(c) for c in cv]
+            # votes for corner i's value among the valid corners; NaN
+            # (NULL) values form one group, as in SQL GROUP BY
+            cnt = [
+                np.where(cm[i], sum(
+                    cm[j] & ((cv[i] == cv[j]) | (nan[i] & nan[j]))
+                    for j in range(4)
+                ), -1)
+                for i in range(4)
+            ]
+            best_v, best_n, best_nan = cv[0], cnt[0], nan[0]
+            for i in range(1, 4):
+                # count ties go to the smaller value; NULL loses them all
+                smaller = (cv[i] < best_v) | (best_nan & ~nan[i])
+                take = (cnt[i] > best_n) | ((cnt[i] == best_n) & smaller)
+                best_v = np.where(take, cv[i], best_v)
+                best_n = np.where(take, cnt[i], best_n)
+                best_nan = np.where(take, nan[i], best_nan)
+            # + 0.0: SQL groups -0.0 with 0.0 and returns 0.0
+            out_v, out_m = best_v + 0.0, cm[0] | cm[1] | cm[2] | cm[3]
+        else:
+            if level == 1:
+                cm = [c & ~np.isnan(x) for c, x in zip(cm, cv)]
+            if kernel == "rms":
+                cv = [x * x for x in cv]
+            s = [np.where(c, x, 0.0) for c, x in zip(cm, cv)]
+            n = sum(c.astype("f8") for c in cm)
+            out_m = n > 0
+            total = (s[0] + s[1]) + (s[2] + s[3])
+            mean = np.where(out_m, total / np.maximum(n, 1.0), np.nan)
+            out_v = np.sqrt(mean) if kernel == "rms" else mean
+        sc = 1 << level
+        h = max(0, min(bs, -(-im_h // sc) - py * bs))
+        w = max(0, min(bs, -(-im_w // sc) - px * bs))
+        data = np.ascontiguousarray(out_v, dtype="<f8").tobytes()
+        vmask = np.packbits(out_m.ravel()).tobytes()
+        return pd.DataFrame(
+            [[level, band, py, px, h, w, data, int(out_m.sum()), vmask]],
+            columns=cols,
+        )
+
+    return step
+
+
+def _stack_levels(base, levels, step, persist_levels, persist_registry):
+    """Driver loop ≙ ccog's level loop (ccog/ccog.py:603-659): level k
+    = step(level k-1, k); returns the union of levels 0..``levels``.
+    Each intermediate level is persisted before deriving the next so
+    it is computed once, not re-derived from level 0 for every consumer
+    — the Spark analogue of the reference's
+    ``to_delayed(optimize_graph=False)`` tradeoff (ccog/ccog.py:618-621).
+    ``persist_registry``: when a list is passed, every persisted level
+    frame is appended so the CALLER can unpersist them once the pyramid
+    is consumed (write_cog does — otherwise repeated writes, e.g. a
+    streaming foreachBatch COG sink, would leak cached level frames for
+    the session's lifetime)."""
+    out = cur = base
+    for lvl in range(1, levels + 1):
+        cur = step(cur, lvl)
+        if persist_levels and lvl < levels:
+            cur = cur.persist()
+            if persist_registry is not None:
+                persist_registry.append(cur)
+        out = out.unionByName(cur)
+    return out
+
+
+def build_tile_pyramid(
+    tiles: DataFrame,
     levels: int,
     kernel: str,
     blocksize: int,
     width: int,
     height: int,
-    nodata: float | None,
+    nodata: float | None = None,
     persist_levels: bool = True,
     persist_registry: list | None = None,
 ) -> DataFrame:
-    """Interpolating-kernel pyramid for the WRITE path (closes R7: the
-    reference writer accepts all 9 GDAL kernels and runs them per chunk,
-    ccog/ccog.py:41-53,905-915,292-360 — here the interpolating five
-    route through the halo-exchange machinery instead of GDAL).
+    """The writer's pyramid: level-0 writer tiles (TILE_MASK_SCHEMA,
+    float64, 0-based bands) → union of the tiles of levels
+    0..``levels``. ``width``/``height`` are the LEVEL-0 image dims.
 
-    Per level: re-tile the current level's pixels (one groupBy-tile
-    shuffle, float64 payloads so the convolution math is exact) and run
-    raster.halo.interp_decimate (strip emit + one tile-key shuffle).
-    Two shuffles per level vs the SQL kernels' one, each level 4×
-    smaller than the last — at 100 TB the halo traffic adds only
-    ~2·halo/blocksize (<2%) over the re-tile itself.
-
-    Validity rule (pinned, documented GDAL divergence): an output pixel
-    is valid iff ALL taps are valid. When a level dim is ODD, its last
-    output row/col always has taps past the image edge (every kernel
-    has an offset ≥ 1), so it is invalid → written as nodata fill; the
-    kernel emits h//2 rows and tiles_from_pixels pads the ceil-halved
-    grid, which is the same thing.
-
-    The re-tile ships the packed validity mask WITH each tile
-    (tiles_from_pixels(with_mask=True)) so validity never round-trips
-    through the nodata sentinel: input rows with valid=false stay
-    invalid under nodata=None, and valid pixels whose value equals
-    nodata stay valid (round-13 ADVICE fix).
-
-    ``persist_registry``: when a list is passed, every intermediate
-    level frame this builder persists is appended to it so the CALLER
-    can unpersist them once the pyramid is consumed (write_cog does —
-    otherwise repeated writes, e.g. a streaming foreachBatch COG sink,
-    would leak cached level frames for the session's lifetime).
+    KERNELS run the tile kernel above. Interpolating kernels (closes R7:
+    the reference runs all 9 GDAL kernels per chunk, ccog/ccog.py:
+    41-53,905-915,292-360) run raster.halo.interp_decimate (strip emit
+    + one tile-key shuffle, float64 so the convolution is exact), then
+    one groupBy-tile shuffle re-tiles the output with its validity
+    mask; the halo adds ~2·halo/blocksize (<2%) over the re-tile.
+    Their validity rule (pinned GDAL divergence): an output pixel is
+    valid iff ALL taps are valid, so the last row/col of an ODD level
+    dim (taps past the edge) is nodata. The mask keeps valid=false rows
+    invalid under nodata=None and valid pixels equal to nodata valid
+    (round-13 ADVICE fix).
     """
     from ccog_spark.raster.halo import INTERP_KERNELS, interp_decimate
-    from ccog_spark.raster.tiles import tiles_from_pixels
+    from ccog_spark.raster.tiles import TILE_MASK_SCHEMA, tiles_from_pixels
 
-    if kernel not in INTERP_KERNELS:
+    if kernel in KERNELS:
+        def step(cur, lvl):
+            return cur.groupBy(
+                "level", "band", F.expr("tile_y div 2"), F.expr("tile_x div 2")
+            ).applyInPandas(
+                _tile_decimate_kernel(blocksize, kernel, width, height),
+                TILE_MASK_SCHEMA,
+            )
+    elif kernel in INTERP_KERNELS:
+        def step(cur, lvl):
+            px = interp_decimate(cur, blocksize, kernel, nodata)
+            return tiles_from_pixels(
+                px.withColumn("level", F.lit(lvl)), blocksize,
+                0.0 if nodata is None else nodata, width, height,
+                dtype="float64", with_mask=True,
+            )
+    else:
         raise ValueError(
-            f"unknown interpolating kernel {kernel!r}; expected one of "
-            f"{sorted(INTERP_KERNELS)}"
+            f"unknown resampling kernel {kernel!r}; expected one of "
+            f"{sorted((*KERNELS, *INTERP_KERNELS))}"
         )
-    out = pixels.withColumn("level", F.lit(0))
-    cur = pixels
-    for lvl in range(1, levels + 1):
-        tiles = tiles_from_pixels(
-            cur.withColumn("level", F.lit(lvl - 1)).select(
-                "level", "band", "y", "x", "value", "valid"
-            ),
-            blocksize,
-            0.0 if nodata is None else nodata,
-            width,
-            height,
-            dtype="float64",
-            with_mask=True,
-        )
-        cur = interp_decimate(tiles, blocksize, kernel, nodata)
-        if persist_levels and lvl < levels:
-            cur = cur.persist()
-            if persist_registry is not None:
-                persist_registry.append(cur)
-        out = out.unionByName(cur.withColumn("level", F.lit(lvl)))
-    return out
+    return _stack_levels(tiles, levels, step, persist_levels, persist_registry)
 
 
 def build_pyramid(
@@ -221,22 +306,11 @@ def build_pyramid(
     persist_levels: bool = True,
     persist_registry: list | None = None,
 ) -> DataFrame:
-    """Full pyramid as a union of level-tagged pixel DataFrames.
-
-    Driver loop ≙ ccog's level loop (ccog/ccog.py:603-659). Each level
-    is persisted before deriving the next so level k is computed once,
-    not re-derived from level 0 for every consumer — the Spark analogue
-    of the reference's ``to_delayed(optimize_graph=False)`` tradeoff
-    (ccog/ccog.py:618-621). ``persist_registry`` collects the persisted
-    handles for caller-side unpersist (see build_pyramid_interp).
-    """
-    out = pixels.withColumn("level", F.lit(0))
-    cur = pixels
-    for lvl in range(1, levels + 1):
-        cur = decimate(cur, kernel)
-        if persist_levels and lvl < levels:
-            cur = cur.persist()
-            if persist_registry is not None:
-                persist_registry.append(cur)
-        out = out.unionByName(cur.withColumn("level", F.lit(lvl)))
-    return out
+    """Pixel-level pyramid: a union of level-tagged long-form pixel
+    DataFrames, one ``decimate`` aggregate per level (the registry's
+    ``pyramid_avg`` query and the tile pyramid's test oracle)."""
+    return _stack_levels(
+        pixels.withColumn("level", F.lit(0)), levels,
+        lambda cur, lvl: decimate(cur, kernel).withColumn("level", F.lit(lvl)),
+        persist_levels, persist_registry,
+    )

@@ -1,4 +1,4 @@
-"""Pixel ↔ tile dual representation (SURVEY.md §1.4).
+"""Tile rows and the pixel ↔ tile conversions (SURVEY.md §1.4).
 
 The reference's fundamental unit is the blocksize×blocksize compressed
 tile (ccog/ccog.py:930-933). Here a tile is one DataFrame row:
@@ -16,11 +16,12 @@ the tile, derived from the LEVEL GEOMETRY (image dims + blocksize), not
 from the observed pixel indices — sparse input missing a tile's
 trailing rows/columns must not shrink the tile.
 
-Conversion runs in Arrow-batched ``applyInPandas``/``mapInPandas``;
-tile payloads never leave their partition except through the one
-groupBy(tile key) shuffle that co-locates a tile's pixels (at 100 TB:
-pixels arrive already tile-clustered from ingest, so AQE turns this
-into a cheap local aggregation).
+The COG writer stays in tile form from ingest to encode: float64 +
+validity-mask tiles (TILE_MASK_SCHEMA) through the pyramid, then
+``cast_tiles`` to the output dtype. Pixels appear only at boundaries:
+``tiles_from_pixels`` (``write_cog``'s level 0, the halo kernels'
+output) and ``pixels_from_tiles`` (queries, statistics). Conversion
+runs in Arrow-batched ``applyInPandas``/``mapInPandas``.
 
 All UDF kernels are self-contained closures (no module references) so
 executors need no importable ccog_spark package.
@@ -36,15 +37,16 @@ TILE_SCHEMA = (
     "height int, width int, data binary, valid_count int"
 )
 
-# tiles_from_pixels(with_mask=True) appends the packed validity grid:
-# np.packbits of the full blocksize×blocksize boolean mask (True only
-# where a VALID input pixel was placed — sparse gaps, valid=false rows
-# and edge padding are all False). Consumers that would otherwise
-# re-derive validity from the nodata sentinel (the halo kernels) read
-# this instead, so valid=false pixels at the fill value and valid
-# pixels whose value EQUALS nodata both survive the round-trip
-# (round-13 ADVICE: the interp write path lost both distinctions).
-# Cost: bs²/8 bytes per tile ≈ 1.6% of a float64 payload.
+# The writer's tile form: a float64 payload plus the packed validity
+# grid ``vmask`` — np.packbits of the full blocksize×blocksize boolean
+# mask (True only where a VALID pixel sits; sparse gaps, valid=false
+# rows and edge padding are all False) — and valid_count equal to its
+# popcount. Invalid pixels hold nodata; a valid pixel without a value
+# (SQL NULL, or NaN from the input array) holds NaN. Kernels read
+# validity from the mask, never from the nodata sentinel, so invalid
+# pixels at the fill value and valid pixels whose value EQUALS nodata
+# both survive (round-13 ADVICE). Cost: bs²/8 bytes per tile ≈ 1.6% of
+# a float64 payload.
 TILE_MASK_SCHEMA = TILE_SCHEMA + ", vmask binary"
 
 PIXEL_SCHEMA = "level int, band int, y int, x int, value double, valid boolean"
@@ -56,24 +58,6 @@ _NP_CHAR = {
     "int8": "i1", "int16": "i2", "int32": "i4",
     "float32": "f4", "float64": "f8",
 }
-
-
-def level_dims(width: int, height: int, level: int) -> tuple[int, int]:
-    """Image dims at pyramid level L: repeated ceil-halving, which for
-    powers of two equals ceil(dim / 2^L) (GDAL overview rule)."""
-    s = 1 << level
-    return (-(-width // s), -(-height // s))
-
-
-def clip_dims(
-    width: int, height: int, blocksize: int, level: int, ty: int, tx: int
-) -> tuple[int, int]:
-    """Geometry-derived (h, w) of the image clip inside tile (ty, tx)."""
-    lw, lh = level_dims(width, height, level)
-    return (
-        max(0, min(blocksize, lh - ty * blocksize)),
-        max(0, min(blocksize, lw - tx * blocksize)),
-    )
 
 
 def tiles_from_pixels(
@@ -89,7 +73,8 @@ def tiles_from_pixels(
 
     ``with_mask=True`` appends a ``vmask`` column (packed validity
     bits, see TILE_MASK_SCHEMA) so downstream kernels never have to
-    infer validity from the nodata sentinel.
+    infer validity from the nodata sentinel; valid rows without a value
+    then hold NaN instead of nodata (float64 payloads only).
 
     One shuffle on the tile key; each group materializes its dense
     full-blocksize block in numpy and emits a single binary row.
@@ -143,7 +128,9 @@ def tiles_from_pixels(
             fill = np.array(nd, dtype="f8").astype(dt).item()
             arr = np.full((bs, bs), fill, dtype=dt)
             valid = pdf["valid"].to_numpy()
-            vals = pdf["value"].to_numpy(dtype="f8", na_value=nd)
+            vals = pdf["value"].to_numpy(
+                dtype="f8", na_value=np.nan if mask else nd
+            )
             iy = pdf["iy"].to_numpy()
             ix = pdf["ix"].to_numpy()
             # same C-cast the encode kernel applied when payloads were
@@ -224,6 +211,41 @@ def interleave_tiles(
     return tiles.groupBy("level", "tile_y", "tile_x").applyInPandas(
         make_kernel(blocksize, bands, nodata, np_dt), TILE_SCHEMA
     )
+
+
+def cast_tiles(
+    tiles: DataFrame,
+    blocksize: int,
+    nodata: float = -9999.0,
+    dtype: str = "float64",
+) -> DataFrame:
+    """Writer tiles (TILE_MASK_SCHEMA, float64) → TILE_SCHEMA rows in
+    the OUTPUT ``dtype``, map-side: valid pixels C-cast, invalid and
+    valueless (NaN) ones at ``nodata`` — tiles_from_pixels' placement
+    and cast, so payloads are byte-identical to re-tiling pixels."""
+    np_dt = "<" + _NP_CHAR[dtype]
+
+    def make_kernel(bs: int, nd: float, np_dtype: str):
+        def cast(it):
+            import numpy as np
+
+            dt = np.dtype(np_dtype)
+            fill = np.array(nd, dtype="f8").astype(dt).item()
+            for pdf in it:
+                data = []
+                for d, vm in zip(pdf["data"], pdf["vmask"]):
+                    v = np.frombuffer(d, dtype="<f8")
+                    keep = np.unpackbits(
+                        np.frombuffer(vm, dtype=np.uint8), count=bs * bs
+                    ).astype(bool) & ~np.isnan(v)
+                    arr = np.full(bs * bs, fill, dtype=dt)
+                    arr[keep] = v[keep].astype(dt)
+                    data.append(arr.tobytes())
+                yield pdf.drop(columns="vmask").assign(data=data)
+
+        return cast
+
+    return tiles.mapInPandas(make_kernel(blocksize, nodata, np_dt), TILE_SCHEMA)
 
 
 def pixels_from_tiles(

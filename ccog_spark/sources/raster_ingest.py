@@ -14,6 +14,9 @@ ccog/ccog.py:940-946). Here:
   user-supplied reader callable inside mapInPandas (in production the
   reader is rasterio/zarr over object storage; not available in this
   container, so tests inject a numpy-backed reader).
+
+Both emit the COG writer's level-0 tiles (raster.tiles.TILE_MASK_SCHEMA).
+A pixel is valid iff the mask says so AND its value is not nodata.
 """
 
 from __future__ import annotations
@@ -22,7 +25,25 @@ import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ccog_spark.raster.tiles import TILE_SCHEMA
+from ccog_spark.raster.tiles import TILE_MASK_SCHEMA
+
+
+def _tile_maker(bs: int, nd: float):
+    """``to_tile(block, m)``: (h, w) values + mask → (full-blocksize
+    float64 payload, packed vmask, valid count); edge padding is nodata
+    and invalid. Self-contained, so it ships to executors by value."""
+
+    def to_tile(block, m):
+        import numpy as np
+
+        h, w = block.shape
+        full = np.full((bs, bs), nd, dtype="<f8")
+        full[:h, :w] = np.where(m, block.astype("<f8"), nd)
+        valid = np.zeros((bs, bs), dtype=bool)
+        valid[:h, :w] = full[:h, :w] != nd
+        return full.tobytes(), np.packbits(valid.ravel()).tobytes(), int(valid.sum())
+
+    return to_tile
 
 
 def plan_tiles(width: int, height: int, bands: int, blocksize: int):
@@ -53,21 +74,16 @@ def ingest_numpy(
     bands, height, width = arr.shape
     if mask is None:
         mask = np.ones((height, width), dtype=bool)
+    to_tile = _tile_maker(blocksize, nodata)
     rows = []
     for (lvl, b, iy, ix, h, w) in plan_tiles(width, height, bands, blocksize):
         sl = (
             slice(iy * blocksize, iy * blocksize + h),
             slice(ix * blocksize, ix * blocksize + w),
         )
-        m = mask[sl] != 0
-        # full blocksize payload: edge tiles padded with nodata (the
-        # TIFF tile contract; ccog_spark.raster.tiles docstring)
-        block = np.full((blocksize, blocksize), nodata, dtype="<f8")
-        block[:h, :w] = np.where(m, arr[b][sl].astype("<f8"), nodata)
-        rows.append(
-            (lvl, b, iy, ix, h, w, block.tobytes(), int(m.sum()))
-        )
-    return spark.createDataFrame(rows, TILE_SCHEMA)
+        data, vmask, n_valid = to_tile(arr[b][sl], mask[sl] != 0)
+        rows.append((lvl, b, iy, ix, h, w, data, n_valid, vmask))
+    return spark.createDataFrame(rows, TILE_MASK_SCHEMA)
 
 
 def ingest_windowed(
@@ -87,35 +103,24 @@ def ingest_windowed(
         keys, "level int, band int, tile_y int, tile_x int, height int, width int"
     ).repartition(max(1, len(keys) // 4), "band", "tile_y", "tile_x")
 
-    def make_kernel(rd, bs: int, nd: float):
+    def make_kernel(rd, bs: int, to_tile):
         def read_tiles(it):
-            import numpy as _np
-            import pandas as _pd
-
             for pdf in it:
-                out = {k: [] for k in (
-                    "level", "band", "tile_y", "tile_x",
-                    "height", "width", "data", "valid_count",
-                )}
+                data, vmask, n_valid = [], [], []
                 for r in pdf.itertuples(index=False):
                     block, m = rd(r.band, r.tile_y * bs, r.tile_x * bs, r.height, r.width)
-                    full = _np.full((bs, bs), nd, dtype="<f8")
-                    full[: r.height, : r.width] = _np.where(
-                        m, block.astype("<f8"), nd
-                    )
-                    out["level"].append(r.level)
-                    out["band"].append(r.band)
-                    out["tile_y"].append(r.tile_y)
-                    out["tile_x"].append(r.tile_x)
-                    out["height"].append(r.height)
-                    out["width"].append(r.width)
-                    out["data"].append(full.tobytes())
-                    out["valid_count"].append(int(m.sum()))
-                yield _pd.DataFrame(out)
+                    d, vm, n = to_tile(block, m)
+                    data.append(d)
+                    vmask.append(vm)
+                    n_valid.append(n)
+                yield pdf.assign(data=data, valid_count=n_valid, vmask=vmask)
 
         return read_tiles
 
-    return keys_df.mapInPandas(make_kernel(reader, blocksize, nodata), TILE_SCHEMA)
+    return keys_df.mapInPandas(
+        make_kernel(reader, blocksize, _tile_maker(blocksize, nodata)),
+        TILE_MASK_SCHEMA,
+    )
 
 
 # --------------------------------------------------------------- xarray

@@ -523,6 +523,29 @@ def test_bm25_worker_thread_persists_stay_ledger_tracked(spark):
     assert len(infos) == 0, [str(i.name()) for i in infos]
 
 
+def test_connected_components_checkpoints_release_with_the_ledger(spark):
+    """connected_components truncates lineage with localCheckpoint,
+    whose blocks DataFrame.unpersist does not free. Earlier rounds'
+    blocks go as soon as the next round is materialized; the last
+    round's are ledger-tracked, so a ledger release leaves RDD storage
+    empty instead of waiting for the JVM's ContextCleaner — later
+    storage-empty checks in the same session depend on it."""
+    from ccog_spark import cache_ledger
+    from ccog_spark.operators.cluster import connected_components
+
+    cache_ledger.release(spark, blocking=True)
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (7, 8), (8, 9), (9, 10)], "doc_a long, doc_b long"
+    )
+    got = {r.doc_id: r.cluster for r in connected_components(edges).collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 7: 7, 8: 7, 9: 7, 10: 7}
+    st = cache_ledger.session_state(spark)
+    assert [own for own, _ in st["persists"]] == ["connected_components"]
+    cache_ledger.release(spark, blocking=True)
+    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    assert len(infos) == 0, [str(i.name()) for i in infos]
+
+
 def test_bm25f_field_weighting_and_shapes(spark):
     """text.bm25f_topk (round 14): a title hit outranks the same hit
     in the body (weights 2:1, identical field lengths); the combined

@@ -3,7 +3,7 @@
 The reference writer accepts all 9 GDAL kernels and runs them per chunk
 (/root/reference/ccog/ccog.py:41-53, validated :905-915, executed
 :292-360). Here write_cog/write_ccog route bilinear/cubic/cubicspline/
-lanczos/gauss through raster.pyramid.build_pyramid_interp (per-level
+lanczos/gauss through raster.pyramid.build_tile_pyramid (per-level
 re-tile + halo-exchange convolution), and these tests pin:
 
 - every written overview level equals the UNTILED driver-side
@@ -215,16 +215,38 @@ def test_rebuild_cog_with_interp_kernel(spark, tmp_path):
         assert np.array_equal(levels[1][b], want)
 
 
-def _level1_grids(rows, h, w, nodata):
-    """Collected level-1 pixel rows → (value, valid) dense arrays."""
+def _pyramid_interp(px, kernel, bs, w, h, nodata):
+    """build_tile_pyramid over long-form pixels: tile level 0 with the
+    validity mask (as write_cog does), one interpolated level."""
+    from ccog_spark.raster.pyramid import build_tile_pyramid
+    from ccog_spark.raster.tiles import tiles_from_pixels
+
+    level0 = tiles_from_pixels(
+        px.selectExpr("0 AS level", "*"), bs,
+        0.0 if nodata is None else nodata, w, h,
+        dtype="float64", with_mask=True,
+    )
+    return build_tile_pyramid(
+        level0, 1, kernel, bs, w, h, nodata, persist_levels=False
+    )
+
+
+def _level1_grids(rows, h, w, bs):
+    """Collected pyramid tile rows → level-1 (value, valid) dense
+    arrays, validity read from each tile's packed vmask."""
     oh, ow = h // 2, w // 2
     vals = np.full((oh, ow), np.nan)
     ok = np.zeros((oh, ow), dtype=bool)
     for r in rows:
         if r.level == 1:
-            ok[r.y, r.x] = bool(r.valid)
-            if r.valid:
-                vals[r.y, r.x] = r.value
+            ys = slice(r.tile_y * bs, r.tile_y * bs + r.height)
+            xs = slice(r.tile_x * bs, r.tile_x * bs + r.width)
+            v = np.frombuffer(r.data, dtype="<f8").reshape(bs, bs)
+            m = np.unpackbits(
+                np.frombuffer(r.vmask, dtype=np.uint8), count=bs * bs
+            ).astype(bool).reshape(bs, bs)
+            ok[ys, xs] = m[: r.height, : r.width]
+            vals[ys, xs] = np.where(ok[ys, xs], v[: r.height, : r.width], np.nan)
     return vals, ok
 
 
@@ -236,8 +258,6 @@ def test_interp_pyramid_valid_false_rows_stay_invalid_without_nodata(spark):
     the level-1 validity must equal the all-taps-valid rule applied to
     the TRUE input mask, and valid values must match the reference
     convolution that zero-weights the invalid pixels."""
-    from ccog_spark.raster.pyramid import build_pyramid_interp
-
     h, w = 32, 32
     rng = np.random.default_rng(21)
     arr = np.floor(rng.uniform(1, 9, (h, w)))
@@ -252,10 +272,8 @@ def test_interp_pyramid_valid_false_rows_stay_invalid_without_nodata(spark):
     px = spark.createDataFrame(
         vals, "band int, y int, x int, value double, valid boolean"
     )
-    out = build_pyramid_interp(
-        px, 1, "cubic", 16, w, h, None, persist_levels=False
-    )
-    got_v, got_ok = _level1_grids(out.collect(), h, w, None)
+    out = _pyramid_interp(px, "cubic", 16, w, h, None)
+    got_v, got_ok = _level1_grids(out.collect(), h, w, 16)
     want, want_ok = interp_decimate_reference(arr, valid, "cubic", None)
     assert not want_ok.all()  # the patch must invalidate some outputs
     assert np.array_equal(got_ok, want_ok)
@@ -267,8 +285,6 @@ def test_interp_pyramid_valid_pixel_at_nodata_value_stays_valid(spark):
     genuinely VALID pixel whose value equals nodata used to be flipped
     invalid by the sentinel re-derivation. With the mask it stays valid
     and contributes its (nodata-valued) sample to the convolution."""
-    from ccog_spark.raster.pyramid import build_pyramid_interp
-
     h, w = 32, 32
     arr = np.fromfunction(lambda y, x: (3 * y + 5 * x) % 11, (h, w))
     arr[8, 8] = NODATA  # valid pixel that HAPPENS to hold -9999.0
@@ -281,10 +297,8 @@ def test_interp_pyramid_valid_pixel_at_nodata_value_stays_valid(spark):
     px = spark.createDataFrame(
         vals, "band int, y int, x int, value double, valid boolean"
     )
-    out = build_pyramid_interp(
-        px, 1, "bilinear", 16, w, h, NODATA, persist_levels=False
-    )
-    got_v, got_ok = _level1_grids(out.collect(), h, w, NODATA)
+    out = _pyramid_interp(px, "bilinear", 16, w, h, NODATA)
+    got_v, got_ok = _level1_grids(out.collect(), h, w, 16)
     want, want_ok = interp_decimate_reference(arr, valid, "bilinear", NODATA)
     assert want_ok.all()  # true mask: every output pixel valid
     assert np.array_equal(got_ok, want_ok)

@@ -433,28 +433,44 @@ def test_submit_inheriting_carries_job_group(spark):
     driver_threads.submit_inheriting carry the CALLER's job group into
     the pool worker thread (raw pool threads do not inherit JVM
     thread-locals under pinned-thread mode), so worker-thread jobs
-    stay visible to setJobGroup-based accounting and cancellation."""
+    stay visible to setJobGroup-based accounting and cancellation.
+    Each submission runs under its own probe group: a helper that does
+    not propagate leaves the inherited group empty, and one that does
+    not restore the worker's properties afterwards leaks its group into
+    the raw submission that reuses the same pool thread."""
     import time
     from concurrent.futures import ThreadPoolExecutor
 
     from ccog_spark.driver_threads import submit_inheriting
 
     sc = spark.sparkContext
-    grp = f"dt_probe_{time.monotonic_ns()}"
-    sc.setJobGroup(grp, "driver_threads probe")
+    ns = time.monotonic_ns()
+    ref, inh, raw = (f"dt_{k}_{ns}" for k in ("ref", "inh", "raw"))
+
+    def count():
+        return spark.range(100).count()
+
+    def jobs(grp):
+        return len(sc.statusTracker().getJobIdsForGroup(grp))
+
     try:
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            raw = pool.submit(lambda: spark.range(100).count())
-            inh = submit_inheriting(
-                pool, spark, lambda: spark.range(100).count()
-            )
-            assert raw.result() == 100 and inh.result() == 100
-        n = len(sc.statusTracker().getJobIdsForGroup(grp))
-        # the inherited submission's job(s) land in the group; the raw
-        # one's do not — so the group holds >=1 and fewer than all
-        assert n >= 1, "submit_inheriting job escaped the caller's group"
+        sc.setJobGroup(ref, "driver_threads probe")
+        assert count() == 100  # jobs one count() issues, in the caller
+        with ThreadPoolExecutor(max_workers=1) as pool:
+            sc.setJobGroup(inh, "driver_threads probe")
+            assert submit_inheriting(pool, spark, count).result() == 100
+            sc.setJobGroup(raw, "driver_threads probe")
+            assert pool.submit(count).result() == 100  # same pool thread
+        assert jobs(ref) >= 1
+        assert jobs(inh) == jobs(ref), "inherited jobs missing or leaked into"
+        assert jobs(raw) == 0, "raw pool thread carried a job group"
     finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+        for p in (
+            "spark.jobGroup.id",
+            "spark.job.description",
+            "spark.job.interruptOnCancel",
+        ):
+            sc.setLocalProperty(p, None)
 
 
 @pytest.mark.slow
