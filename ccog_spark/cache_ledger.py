@@ -59,13 +59,13 @@ def track(spark, owner: str, df: DataFrame) -> DataFrame:
     return df
 
 
-def track_in_capture(spark, owner: str, handle):
-    """``track`` for a release handle that is not a DataFrame persist
-    (anything with ``unpersist(blocking=…)``, e.g. checkpoint blocks):
-    attributed like a captured persist — to the innermost capture open
-    on THIS thread — and to ``owner`` outside any capture."""
-    stack = getattr(_TLS, "stack", None)
-    return track(spark, stack[-1][1] if stack else owner, handle)
+def track_uncaptured(spark, owner: str, df: DataFrame) -> DataFrame:
+    """``track`` for a persist made outside any capture on THIS thread
+    (a direct operator call); inside one, the capture has already
+    recorded it under the query being built."""
+    if not getattr(_TLS, "stack", None):
+        track(spark, owner, df)
+    return df
 
 
 def _drop(entries: list[tuple[str, DataFrame]], blocking: bool) -> None:

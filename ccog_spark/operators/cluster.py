@@ -12,8 +12,9 @@ standard Spark shape for iterative graph algorithms without GraphX
 
 Scale: near-dup components are tiny (dup clusters of 2-10 docs), so
 diameter ≈ 2-3 and rounds stay few; each round's shuffle carries one
-(id, label) pair per edge endpoint. ``persist`` + ``localCheckpoint``
-truncate the lineage so plan depth stays constant across rounds.
+(id, label) pair per edge endpoint. Each round is persisted behind a
+leaf-sized plan that keeps its RDD lineage, so plan depth stays
+constant across rounds and every cache stays safe to release.
 """
 
 from __future__ import annotations
@@ -24,19 +25,16 @@ from pyspark.sql import functions as F
 from ccog_spark import cache_ledger
 
 
-class _CheckpointBlocks:
-    """Release handle for a localCheckpoint-ed frame. Its blocks belong
-    to the checkpointed RDD under the frame's LogicalRDD, which
-    ``DataFrame.unpersist`` leaves alone; without this they stay in
-    storage until the JVM's ContextCleaner happens to collect the RDD.
-    Same ``unpersist`` call shape as a DataFrame, so the cache ledger
-    can hold it."""
-
-    def __init__(self, df: DataFrame):
-        self._rdd = df._jdf.queryExecution().analyzed().rdd()
-
-    def unpersist(self, blocking: bool = False) -> None:
-        self._rdd.unpersist(blocking)
+def _leaf(df: DataFrame) -> DataFrame:
+    """``df``'s rows behind a leaf-sized plan (a LogicalRDD over its
+    row RDD, built JVM-side: no Python round trip) that keeps the full
+    RDD lineage. Unlike a checkpoint it stays recomputable, so a persist
+    of it is a plain cache that any ledger release may drop."""
+    spark = df.sparkSession
+    jdf = spark._jsparkSession.createDataFrame(
+        df._jdf.javaRDD(), df._jdf.schema()
+    )
+    return DataFrame(jdf, spark)
 
 
 def connected_components(
@@ -47,6 +45,8 @@ def connected_components(
 ) -> DataFrame:
     """edges (src, dst) → (doc_id, cluster) with cluster = min vertex id
     reachable in the component. Vertices = edge endpoints."""
+    # the previous direct call's result cache (see the end)
+    cache_ledger.release_owner(edges.sparkSession, "connected_components")
     both = edges.select(
         F.col(src).alias("u"), F.col(dst).alias("v")
     ).unionByName(
@@ -75,7 +75,7 @@ def connected_components(
     )
 
     label_t = labels.schema["label"].dataType
-    prev_cached = [labels]
+    prev = labels
     for it in range(max_iter):
         # ONE aggregate per round (round 18, VERDICT r17 #3 "aggregate
         # the join output once"): neighbour labels from the edge join
@@ -106,38 +106,34 @@ def connected_components(
             )
             .select("doc_id", "old_label", "label")
         )
-        # Lineage truncation EVERY round, lazily (round 17): with
-        # plain persist the round-N plan text embeds every prior
-        # round's full lineage — label propagation references `labels`
-        # twice per round (the join and the select), so the tree GROWS
-        # EXPONENTIALLY in rounds (pipeline_e2e's captured sf0.1 plan:
-        # 26 387 lines / 3007 Exchange nodes after two rounds; the
-        # optimizer walks all of it on every action — guide §7.3
-        # "planning time itself becomes the bottleneck"). A LAZY
-        # localCheckpoint truncates lineage at the same cost point:
-        # the changed-labels count below materializes the checkpoint
-        # blocks as a side effect (no extra eager job — the reason
-        # persist was preferred before), and every later reference
-        # reads blocks with a leaf-sized plan.
-        stepped = stepped.localCheckpoint(eager=False)
+        # Plan truncation EVERY round (round 17): without it the
+        # round-N plan text embeds every prior round's full plan —
+        # label propagation references `labels` twice per round (the
+        # join and the select), so the tree GROWS EXPONENTIALLY in
+        # rounds (pipeline_e2e's captured sf0.1 plan: 26 387 lines /
+        # 3007 Exchange nodes after two rounds; the optimizer walks all
+        # of it on every action — guide §7.3 "planning time itself
+        # becomes the bottleneck"). `_leaf` cuts the PLAN but keeps the
+        # RDD lineage, so — unlike a localCheckpoint, whose blocks
+        # cannot be recomputed — every round is an ordinary persist
+        # that the cache ledger may release while a result is still
+        # lazy or running. The changed-labels count below materializes
+        # the cache as a side effect (no extra eager job).
+        stepped = _leaf(stepped).persist()
         changed = stepped.where(F.col("label") != F.col("old_label")).count()
         # the count above materialized `stepped`; the previous round's
-        # caches are now dead weight (consumers of the select below hit
-        # stepped's checkpoint blocks, not its lineage): the persisted
-        # init-round `labels`, or the previous round's checkpoint blocks
-        for f in prev_cached:
-            f.unpersist()
-        prev_cached = [_CheckpointBlocks(stepped)]
+        # cache is now dead weight (consumers of the select below hit
+        # stepped's cache, and a recompute only re-reads its shuffle)
+        prev.unpersist()
+        prev = stepped
         labels = stepped.select("doc_id", "label")
         if changed == 0:
             break
     both.unpersist()
-    # the result reads the last round's checkpoint blocks, so they stay
-    # until the ledger releases them (the registry does when another
-    # query enters) — never at this operator's re-entry, because a
-    # checkpoint cannot be recomputed once its blocks are gone
-    for f in prev_cached:
-        cache_ledger.track_in_capture(
-            edges.sparkSession, "connected_components", f
-        )
+    # the result reads the last round's cache: ledger-tracked, so the
+    # registry drops it when another query starts and a direct caller's
+    # next call drops the previous one (bm25_topk's rule)
+    cache_ledger.track_uncaptured(
+        edges.sparkSession, "connected_components", prev
+    )
     return labels.select("doc_id", F.col("label").alias("cluster"))

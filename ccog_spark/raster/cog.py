@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import inspect
 from dataclasses import dataclass
+from types import SimpleNamespace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -338,45 +339,46 @@ _WRITE_COG_DEFAULTS = {
 
 
 def _write_tiles(
-    spark: SparkSession, tiles: DataFrame, level0_pixels: DataFrame, *,
-    width, height, bands, target_path, blocksize, kernel, nodata,
-    n_overviews, min_part_size, fmt, statistics, band_meta,
-    compress_level, overview_compress_level, codec, geo, dtype, predictor,
-    overview_codec, overview_predictor, storage_options, internal_mask,
-    ghost, pixel_interleave, jpeg_subsampling, colormap,
+    spark: SparkSession, tiles: DataFrame, level0_pixels: DataFrame,
+    width: int, height: int, bands: int, target_path: str, **opts,
 ) -> CogWriteResult:
     """The writer core behind ``write_cog`` and ``write_ccog`` (options
     documented on ``write_cog``). ``tiles`` are the level-0 writer tiles
     (raster.tiles.TILE_MASK_SCHEMA: float64 payload + packed vmask,
     0-based bands); ``level0_pixels`` is the same level as long-form
-    pixels, read only by the ``statistics`` aggregate."""
-    if n_overviews is None:
-        n_overviews = overview_count(width, height, blocksize)
+    pixels, read only by the ``statistics`` aggregate. ``opts`` are
+    ``write_cog``'s keyword options, defaulted like its signature."""
+    unknown = opts.keys() - _WRITE_COG_DEFAULTS.keys()
+    if unknown:
+        raise TypeError(f"unknown write_cog option(s) {sorted(unknown)}")
+    o = SimpleNamespace(**{**_WRITE_COG_DEFAULTS, **opts})
+    if o.n_overviews is None:
+        o.n_overviews = overview_count(width, height, o.blocksize)
 
     # dtype/predictor validation (≙ ccog forwarding dtype into the
     # profile, ccog/ccog.py:952-955; predictor rules per TIFF spec)
-    if dtype not in tiff.DTYPES:
+    if o.dtype not in tiff.DTYPES:
         raise ValueError(
-            f"unsupported dtype {dtype!r}; expected one of {sorted(tiff.DTYPES)}"
+            f"unsupported dtype {o.dtype!r}; expected one of {sorted(tiff.DTYPES)}"
         )
     import numpy as _np
 
-    _dt = _np.dtype(tiff.np_dtype_le(dtype))
+    _dt = _np.dtype(tiff.np_dtype_le(o.dtype))
     # nodata=None: the file declares NO nodata (no GDAL_NODATA tag);
     # tile padding / sparse fill use 0 — GDAL's fill for sparse files
     # without a declared nodata — and readers treat every pixel as
     # valid. This is how rebuild_cog preserves "source never declared
     # nodata" instead of inventing a sentinel that wraps for int
     # dtypes (round-7 ADVICE).
-    fill = 0.0 if nodata is None else nodata
-    if _dt.kind in "ui" and nodata is not None:
-        if nodata != int(nodata) or not (
-            _np.iinfo(_dt).min <= int(nodata) <= _np.iinfo(_dt).max
+    fill = 0.0 if o.nodata is None else o.nodata
+    if _dt.kind in "ui" and o.nodata is not None:
+        if o.nodata != int(o.nodata) or not (
+            _np.iinfo(_dt).min <= int(o.nodata) <= _np.iinfo(_dt).max
         ):
             raise ValueError(
-                f"nodata {nodata} not representable in dtype {dtype}"
+                f"nodata {o.nodata} not representable in dtype {o.dtype}"
             )
-    for p in (predictor, overview_predictor):
+    for p in (o.predictor, o.overview_predictor):
         if p is None or p == 1:
             continue
         if p == 2 and _dt.kind not in "ui":
@@ -389,22 +391,22 @@ def _write_tiles(
     # samples in the pixel domain: a non-uint8 dtype or a differencing
     # predictor would make the lossy codec reconstruct garbage — the
     # same constraint GDAL enforces for JPEG-in-TIFF)
-    for c, p in ((codec, predictor), (overview_codec or codec,
-                 predictor if overview_predictor is None
-                 else overview_predictor)):
+    for c, p in ((o.codec, o.predictor), (o.overview_codec or o.codec,
+                 o.predictor if o.overview_predictor is None
+                 else o.overview_predictor)):
         spec_c = codecs_mod.REGISTRY.get(c)
         if spec_c is None:
             raise ValueError(f"unknown codec {c!r}")
-        if spec_c.sample_dtypes is not None and dtype not in spec_c.sample_dtypes:
+        if spec_c.sample_dtypes is not None and o.dtype not in spec_c.sample_dtypes:
             raise ValueError(
                 f"codec {c!r} requires dtype in {spec_c.sample_dtypes}, "
-                f"got {dtype!r}"
+                f"got {o.dtype!r}"
             )
         if not spec_c.predictor_ok and p not in (None, 1):
             raise ValueError(f"codec {c!r} does not compose with predictors")
 
-    if pixel_interleave:
-        if codec != "jpeg" or (overview_codec or codec) != "jpeg":
+    if o.pixel_interleave:
+        if o.codec != "jpeg" or (o.overview_codec or o.codec) != "jpeg":
             raise ValueError(
                 "pixel_interleave requires codec='jpeg' on all levels"
             )
@@ -413,38 +415,38 @@ def _write_tiles(
                 f"pixel_interleave (YCbCr JPEG) requires exactly 3 "
                 f"bands, got {bands}"
             )
-        if dtype != "uint8":
+        if o.dtype != "uint8":
             raise ValueError("pixel_interleave requires dtype='uint8'")
-        if jpeg_subsampling not in ("444", "420", "422", "440"):
+        if o.jpeg_subsampling not in ("444", "420", "422", "440"):
             raise ValueError(
                 f"jpeg_subsampling must be one of 444/420/422/440, "
-                f"got {jpeg_subsampling!r}"
+                f"got {o.jpeg_subsampling!r}"
             )
-        if internal_mask:
+        if o.internal_mask:
             raise ValueError(
                 "internal_mask with pixel_interleave is not supported"
             )
-    if colormap is not None:
+    if o.colormap is not None:
         # fail BEFORE the pyramid/encode jobs run (build_cog_plan
         # re-validates, but only after the expensive distributed work)
         if bands != 1:
             raise ValueError("colormap requires a single band")
-        if dtype not in ("uint8", "uint16"):
+        if o.dtype not in ("uint8", "uint16"):
             raise ValueError(
-                f"colormap requires dtype uint8/uint16, got {dtype!r}"
+                f"colormap requires dtype uint8/uint16, got {o.dtype!r}"
             )
-        if pixel_interleave:
+        if o.pixel_interleave:
             raise ValueError("colormap and pixel_interleave conflict")
 
     meta_items: list[tuple] = []
-    if band_meta:
+    if o.band_meta:
         key_of = {
             "description": "DESCRIPTION",
             "scale": "SCALE",
             "offset": "OFFSET",
             "unit": "UNITTYPE",
         }
-        for b, kv in sorted(band_meta.items()):
+        for b, kv in sorted(o.band_meta.items()):
             for k, v in kv.items():
                 if k == "colorinterp":
                     # GDAL's role="colorinterp" item (GeoTIFF driver
@@ -454,7 +456,7 @@ def _write_tiles(
                     )
                 else:
                     meta_items.append((key_of.get(k, k.upper()), b, str(v)))
-    if statistics:
+    if o.statistics:
         # one small job: 5 scalars per band (≙ ccog/ccog.py:511-541)
         vv = F.when(F.col("valid"), F.col("value"))
         stats = (
@@ -488,41 +490,41 @@ def _write_tiles(
     # table is accepted (ccog/ccog.py:41-53,905-915).
     level_persists: list = []
     pyr = build_tile_pyramid(
-        tiles, n_overviews, kernel, blocksize, width, height, nodata,
+        tiles, o.n_overviews, o.kernel, o.blocksize, width, height, o.nodata,
         persist_registry=level_persists,
     )
-    tiles = cast_tiles(pyr, blocksize, fill, dtype)
+    tiles = cast_tiles(pyr, o.blocksize, fill, o.dtype)
     encode_override = None
-    if pixel_interleave:
+    if o.pixel_interleave:
         from functools import partial
 
         from ccog_spark.raster import jpegcodec as _jc
         from ccog_spark.raster.tiles import interleave_tiles
 
         tiles = interleave_tiles(
-            tiles, bands, blocksize, nodata=fill, dtype=dtype
+            tiles, bands, o.blocksize, nodata=fill, dtype=o.dtype
         )
         # encode_color ships by value with the jpegcodec module
         # (register_worker_modules) — partial binds only the subsampling
         encode_override = partial(
-            _jc.encode_color, subsampling=jpeg_subsampling
+            _jc.encode_color, subsampling=o.jpeg_subsampling
         )
     enc = encode_tiles(
         tiles,
-        compress_level=compress_level,
-        overview_compress_level=overview_compress_level,
-        codec=codec,
-        blocksize=blocksize,
-        dtype=dtype,
-        predictor=predictor,
-        overview_codec=overview_codec,
-        overview_predictor=overview_predictor,
+        compress_level=o.compress_level,
+        overview_compress_level=o.overview_compress_level,
+        codec=o.codec,
+        blocksize=o.blocksize,
+        dtype=o.dtype,
+        predictor=o.predictor,
+        overview_codec=o.overview_codec,
+        overview_predictor=o.overview_predictor,
         encode_override=encode_override,
     ).persist()
 
     mask_enc = None
     mask_tile_nbytes = None
-    if internal_mask:
+    if o.internal_mask:
         mask_enc = encode_mask_tiles(pyr).where(
             F.col("valid_count") > 0
         ).persist()
@@ -541,40 +543,40 @@ def _write_tiles(
         width,
         height,
         bands,
-        blocksize,
-        n_overviews,
+        o.blocksize,
+        o.n_overviews,
         tile_nbytes,
-        nodata,
-        fmt=fmt,
+        o.nodata,
+        fmt=o.fmt,
         metadata_xml=metadata_xml,
-        codec=codec,
-        geo=geo,
-        dtype=dtype,
-        predictor=predictor,
-        overview_codec=overview_codec,
-        overview_predictor=overview_predictor,
+        codec=o.codec,
+        geo=o.geo,
+        dtype=o.dtype,
+        predictor=o.predictor,
+        overview_codec=o.overview_codec,
+        overview_predictor=o.overview_predictor,
         # JPEG-family port point: global JPEGTables copies (level-0 and
         # overview codecs each carry their own when they differ),
         # already per-part-asserted identical inside encode_tiles
-        shared_tables=codecs_mod.shared_tables(codec, compress_level),
+        shared_tables=codecs_mod.shared_tables(o.codec, o.compress_level),
         overview_shared_tables=codecs_mod.shared_tables(
-            overview_codec or codec,
-            compress_level
-            if overview_compress_level is None
-            else overview_compress_level,
+            o.overview_codec or o.codec,
+            o.compress_level
+            if o.overview_compress_level is None
+            else o.overview_compress_level,
         ),
         mask_tile_nbytes=mask_tile_nbytes,
-        ghost=ghost,
-        planar_config=1 if pixel_interleave else 2,
-        photometric=6 if pixel_interleave else 1,
+        ghost=o.ghost,
+        planar_config=1 if o.pixel_interleave else 2,
+        photometric=6 if o.pixel_interleave else 1,
         ycbcr_subsampling=(
             {"444": (1, 1), "420": (2, 2), "422": (2, 1), "440": (1, 2)}[
-                jpeg_subsampling
+                o.jpeg_subsampling
             ]
-            if pixel_interleave
+            if o.pixel_interleave
             else None
         ),
-        colormap=colormap,
+        colormap=o.colormap,
     )
 
     # file_seq: header is 0; tiles follow in plan order. The tile-key →
@@ -592,11 +594,11 @@ def _write_tiles(
                 for (lvl, ty, tx), nb in mask_tile_nbytes.items()
             }
         )
-    ghost_pad = tiff.GHOST_TILE_PAD if ghost else 0
+    ghost_pad = tiff.GHOST_TILE_PAD if o.ghost else 0
     sizes = [len(plan.header)] + [
         all_nbytes[k] + ghost_pad for k in plan.file_order
     ]
-    kwargs = {} if min_part_size is None else {"min_part": min_part_size}
+    kwargs = {} if o.min_part_size is None else {"min_part": o.min_part_size}
     parts = pack_parts(sizes, **kwargs)
     part_firsts = [p.first_seq for p in parts]
 
@@ -629,7 +631,7 @@ def _write_tiles(
                 "data",
             )
         )
-    if ghost:
+    if o.ghost:
         # wrap each stored tile with the GDAL ghost leader/trailer
         # (≙ the reference re-adding them per part, ccog/ccog.py:430-441)
         from pyspark.sql.functions import pandas_udf
@@ -668,7 +670,7 @@ def _write_tiles(
     )
     segments = header_segment.unionByName(tile_segments)
 
-    store = resolve_store(target_path, storage_options)
+    store = resolve_store(target_path, o.storage_options)
     store.create()
     try:
         receipts = upload_segments(segments, len(parts), store.part_putter())
@@ -858,20 +860,16 @@ def write_ccog(
     # the ingest tiles ARE the writer's level-0 tiles: no pixel rows
     # unless statistics=True asks for the level-0 aggregate
     tiles = ingest_numpy(spark, arr, mask, blocksize=blocksize, nodata=nodata)
-    opts = {
-        **_WRITE_COG_DEFAULTS,
-        **kwargs,
-        "blocksize": blocksize,
-        "kernel": overview_resampling,
-        "nodata": nodata,
-    }
     return _write_tiles(
         spark,
         tiles,
         pixels_from_tiles(tiles, blocksize, nodata),
-        width=width,
-        height=height,
-        bands=bands,
-        target_path=store,
-        **opts,
+        width,
+        height,
+        bands,
+        store,
+        blocksize=blocksize,
+        kernel=overview_resampling,
+        nodata=nodata,
+        **kwargs,
     )
